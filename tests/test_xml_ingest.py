@@ -388,10 +388,17 @@ def test_import_dump_full_end_to_end(spark, tmp_path):
         "redirect",
         "pagelinks_resolved",
     }
-    # every table landed in parquet and reads back with the same count
+    # every table landed in parquet, reads back with the same count, and
+    # the returned frame is that parquet read back (the lake is the sink
+    # of record, nothing upstream of it is recomputed)
     for name, df in out.items():
-        back = spark.read.parquet(str(tmp_path / "lake" / f"{name}.parquet"))
+        lake = tmp_path / "lake" / f"{name}.parquet"
+        back = spark.read.parquet(str(lake))
         assert back.count() == df.count(), name
+        files = df.inputFiles()
+        assert files, name
+        for f in files:
+            assert f.startswith(lake.as_uri() + "/"), (name, f)
 
     # golden: the two-hop chain Spark -> Spark (cluster computing) ->
     # Apache Spark rewrites the link target through the redirect table
@@ -415,18 +422,88 @@ def test_import_dump_full_end_to_end(spark, tmp_path):
     assert raw[(203, "Spark (cluster computing)")] == 1
 
     if url is not None:
-        jdbc_back = (
-            spark.read.format("jdbc")
-            .option("url", url)
-            .option("dbtable", "wiki_pagelinks_resolved")
-            .option("driver", driver)
-            .load()
+        # each JDBC table holds exactly the rows of its parquet twin
+        for name in ("page", "redirect", "pagelinks_resolved"):
+            jdbc_back = (
+                spark.read.format("jdbc")
+                .option("url", url)
+                .option("dbtable", f"wiki_{name}")
+                .option("driver", driver)
+                .load()
+            )
+            got = {tuple(r) for r in jdbc_back.collect()}
+            assert got == {tuple(r) for r in out[name].collect()}, (
+                f"JDBC wiki_{name} diverged from its parquet twin"
+            )
+
+
+def _cached_rdd_ids(spark) -> set[int]:
+    return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+def test_imports_release_page_cache(spark, tmp_path):
+    """Both imports cache the parsed pages for their sinks and must release
+    them before returning: the storage holds nothing the call added."""
+    from wikipedia_org_xmldump_importer_spark.sources.xml_pages import (
+        import_dump_full,
+    )
+
+    spark.catalog.clearCache()
+    # RDDs other tests persisted outside the catalog (localCheckpoint)
+    before = _cached_rdd_ids(spark)
+    src = str(FIXTURES / "wikilinks.xml")
+    import_dump(spark, src, str(tmp_path / "plain"), namespace=None)
+    assert _cached_rdd_ids(spark) == before, "import_dump left pages cached"
+    import_dump_full(spark, src, str(tmp_path / "full"))
+    assert _cached_rdd_ids(spark) == before, "import_dump_full left pages cached"
+
+
+def test_import_dump_full_sink_failure_raises(spark, tmp_path):
+    """A sink failing in its worker thread raises from import_dump_full —
+    here a JDBC URL to an in-memory Derby database that does not exist (no
+    ``;create=true``) — and the page cache is still released."""
+    import pytest
+
+    from wikipedia_org_xmldump_importer_spark.sources.xml_pages import (
+        import_dump_full,
+    )
+
+    spark.catalog.clearCache()
+    before = _cached_rdd_ids(spark)
+    with pytest.raises(Exception, match="nosuchdb"):
+        import_dump_full(
+            spark,
+            str(FIXTURES / "wikilinks.xml"),
+            str(tmp_path / "lake"),
+            jdbc_url="jdbc:derby:memory:nosuchdb",
+            jdbc_properties={"driver": "org.apache.derby.jdbc.EmbeddedDriver"},
         )
-        got = {
-            (r.from_page_id, r.to_title_resolved): r.n_occurrences
-            for r in jdbc_back.collect()
-        }
-        assert got == resolved, "JDBC round-trip diverged from the DataFrame"
+    assert _cached_rdd_ids(spark) == before
+    # the independent parquet sinks still completed
+    assert spark.read.parquet(str(tmp_path / "lake" / "text.parquet")).count() > 0
+
+
+def test_import_dump_full_keeps_callers_job_group(spark, tmp_path):
+    """Sink jobs run in worker threads but under the caller's job group, so
+    ``cancelJobGroup`` on that group reaches every one of them."""
+    from wikipedia_org_xmldump_importer_spark.sources.xml_pages import (
+        import_dump_full,
+    )
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("import-under-test", "import_dump_full job group test")
+    try:
+        out = import_dump_full(
+            spark, str(FIXTURES / "wikilinks.xml"), str(tmp_path / "lake")
+        )
+    finally:
+        sc._jsc.clearJobGroup()
+    grouped = tracker.getJobIdsForGroup("import-under-test")
+    # at least one job per parquet sink, and no job escaped the group
+    assert len(grouped) >= len(out)
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
 
 
 def test_stream_import_dump_incremental_matches_batch(spark, tmp_path):

@@ -35,6 +35,10 @@ lands in DataFrames → Parquet (or the JDBC sink, io.sink_jdbc).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from concurrent.futures import Future, ThreadPoolExecutor
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -45,6 +49,7 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+from pyspark.util import inheritable_thread_target
 
 # Explicit schema for <page> rows per the public export-0.11 XSD.
 # Attribute-valued fields surface as `_`-prefixed struct fields; the
@@ -343,6 +348,47 @@ def _scan_pages_any(
     return scan_xml_pages(spark, dump_path, include_text=include_text)
 
 
+def _run_sink_graph(
+    spark: SparkSession, steps: dict[str, tuple[tuple[str, ...], Callable]]
+) -> dict[str, object]:
+    """Run ``steps`` — name -> (dependency names, fn) — each in its own
+    thread, and return every step's result by name. A step starts as soon
+    as it is submitted and calls ``fn(*dependency results)`` once its
+    dependencies have finished, so independent sinks run as concurrent
+    Spark jobs and a dependent sink starts the moment its inputs exist.
+    Dependencies must be listed before their dependents.
+
+    One thread per step, so a step blocked on its inputs never starves
+    another. Each step runs under the caller's Spark local properties
+    (``inheritable_thread_target``), so a job group, description or tag
+    the caller set covers every sink job and ``cancelJobGroup`` reaches
+    them. All steps finish before this returns; the first failure (in
+    step order) is then raised, and a failed step fails its dependents."""
+    futures: dict[str, Future] = {}
+
+    def run(fn: Callable, deps: list[Future]) -> object:
+        return fn(*(d.result() for d in deps))
+
+    with ThreadPoolExecutor(max_workers=len(steps)) as pool:
+        for name, (deps, fn) in steps.items():
+            futures[name] = pool.submit(
+                inheritable_thread_target(spark)(run),
+                fn,
+                [futures[d] for d in deps],
+            )
+    return {name: f.result() for name, f in futures.items()}
+
+
+def _write_parquet(spark: SparkSession, path: str, df: DataFrame) -> DataFrame:
+    """Sink ``df`` to ``path`` and return the written table read back — the
+    frame later steps and callers consume, so nothing upstream of the lake
+    is recomputed."""
+    from ..io import sink_parquet  # noqa: PLC0415
+
+    sink_parquet(df, path)
+    return spark.read.parquet(path)
+
+
 def import_dump(
     spark: SparkSession,
     dump_path: str,
@@ -357,27 +403,36 @@ def import_dump(
     swap sink_parquet for io.sink_jdbc when a DB DSN is configured).
     ``multistream_index`` switches the page source to the s20 multistream
     reader, so the format real dumps ship in feeds this pipeline directly
-    (tested row-identical to the mono path).
+    (tested row-identical to the mono path). Returns each table read back
+    from the Parquet just written.
 
-    100 TB notes: one XML scan feeds all requested flattens; caching the
-    filtered page DF avoids re-parsing (XML parse dominates cost). A
-    metadata-only import (``tables`` without "text") scans with the pruned
-    schema so the article payload is never parsed into rows. Output
-    partitioned by namespace — the standard pruning key for downstream
-    article queries.
+    100 TB notes: one XML scan, cached after the namespace filter, feeds
+    every requested flatten — XML parse dominates cost and runs once. The
+    flattens are written to Parquet concurrently (one Spark job per
+    table, sharing the cores), and the cache is released when they finish,
+    success or failure. A metadata-only import (``tables`` without "text")
+    scans with the pruned schema so the article payload is never parsed
+    into rows.
     """
-    from ..io import sink_parquet  # noqa: PLC0415
-
     pages = _scan_pages_any(
         spark, dump_path, "text" in tables, multistream_index
     )
     if namespace is not None:
         pages = filter_namespace(pages, namespace, drop_redirects)
     pages = pages.cache()
-    out = {name: _FLATTENS[name](pages) for name in tables}
-    for name, df in out.items():
-        sink_parquet(df, f"{out_dir}/{name}.parquet")
-    return out
+    try:
+        return _run_sink_graph(
+            spark,
+            {
+                name: ((), partial(
+                    _write_parquet, spark, f"{out_dir}/{name}.parquet",
+                    _FLATTENS[name](pages),
+                ))
+                for name in tables
+            },
+        )
+    finally:
+        pages.unpersist(blocking=True)
 
 
 # --------------------------------------------------------------------------
@@ -593,42 +648,84 @@ def import_dump_full(
       FINAL title (a wikilink into ``Spark`` counts as a link into
       ``Apache Spark``), re-aggregated at the resolved-target grain.
 
-    100 TB notes: ONE XML scan (cached post-namespace-filter) feeds every
-    flatten and the link extraction — XML parse dominates dump cost and
-    must never run twice. The redirect frame is a few percent of pages on
-    any real wiki, so the resolution join broadcasts; the resolved-graph
-    re-aggregation shuffles on (from_page_id, resolved_title) — the same
-    key grain as the raw extraction, so AQE coalesces it into the
-    extraction's own exchange footprint. JDBC load covers the metadata
-    tables (page/redirect/resolved links), NOT text — shipping article
-    payloads through row-at-a-time JDBC is the reference's documented
-    bottleneck; the parquet lake is the text sink of record.
+    Each returned frame reads its table back from ``<out_dir>/<name>.parquet``.
+
+    100 TB notes: the sinks run as a small dependency graph in which each
+    table is computed once and each sink starts as soon as its input
+    exists. ONE XML scan (cached after the namespace filter) feeds the four
+    flattens, ``pagelinks`` and ``redirect``, which are written to Parquet
+    concurrently — XML parse dominates dump cost and must never run twice.
+    The Parquet lake is the sink of record: ``pagelinks_resolved`` is built
+    from the written ``pagelinks`` and ``redirect`` tables, and each JDBC
+    load reads its table's Parquet back, so the redirect self-joins, the
+    link regex and the page flatten each run once per import rather than
+    once per sink. The page cache is released when the graph finishes,
+    success or failure; a failing sink raises from here after the other
+    sinks finish. Sink jobs run in worker threads under the caller's job
+    group, description and tags. The redirect frame is a few percent of
+    pages on any real wiki, so the resolution join broadcasts; the
+    resolved-graph re-aggregation shuffles on (from_page_id,
+    resolved_title). JDBC load covers the metadata tables
+    (page/redirect/resolved links), NOT text — shipping article payloads
+    through row-at-a-time JDBC is the reference's documented bottleneck;
+    the Parquet lake is the text sink of record.
     """
-    from ..io import sink_jdbc, sink_parquet  # noqa: PLC0415
+    from ..io import sink_jdbc  # noqa: PLC0415
+
+    def lake(name: str) -> str:
+        return f"{out_dir}/{name}.parquet"
+
+    def jdbc_load(name: str, df: DataFrame) -> None:
+        sink_jdbc(
+            df,
+            jdbc_url,
+            f"wiki_{name}",
+            mode="overwrite",
+            num_partitions=4,
+            properties=jdbc_properties,
+        )
 
     pages = _scan_pages_any(spark, dump_path, True, multistream_index)
     if namespace is not None:
         pages = filter_namespace(pages, namespace, drop_redirects=False)
     pages = pages.cache()
+    try:
+        from_scan = {name: _FLATTENS[name](pages) for name in _FLATTENS}
+        from_scan["pagelinks"] = extract_wikilinks(pages)
+        from_scan["redirect"] = resolve_redirect_chains(pages)
+        steps = {
+            name: ((), partial(_write_parquet, spark, lake(name), df))
+            for name, df in from_scan.items()
+        }
+        steps["pagelinks_resolved"] = (
+            ("pagelinks", "redirect"),
+            lambda links, redirect: _write_parquet(
+                spark,
+                lake("pagelinks_resolved"),
+                _resolve_pagelinks(links, redirect),
+            ),
+        )
+        tables = list(steps)
+        if jdbc_url is not None:
+            for name in ("page", "redirect", "pagelinks_resolved"):
+                steps[f"jdbc_{name}"] = ((name,), partial(jdbc_load, name))
+        done = _run_sink_graph(spark, steps)
+    finally:
+        pages.unpersist(blocking=True)
+    return {name: done[name] for name in tables}
 
-    out: dict[str, DataFrame] = {
-        name: _FLATTENS[name](pages)
-        for name in ("page", "revision", "contributor", "text")
-    }
-    out["pagelinks"] = extract_wikilinks(pages)
-    out["redirect"] = resolve_redirect_chains(pages)
 
+def _resolve_pagelinks(pagelinks: DataFrame, redirect: DataFrame) -> DataFrame:
+    """``pagelinks_resolved``: each link target rewritten through the
+    resolved redirects to its final title, re-aggregated at that grain."""
     resolved_dim = F.broadcast(
-        out["redirect"]
-        .filter(F.col("status") == "resolved")
-        .select(
+        redirect.filter(F.col("status") == "resolved").select(
             F.col("title").alias("r_title"),
             F.col("final_title").alias("r_final"),
         )
     )
-    out["pagelinks_resolved"] = (
-        out["pagelinks"]
-        .join(resolved_dim, F.col("to_title") == F.col("r_title"), "left")
+    return (
+        pagelinks.join(resolved_dim, F.col("to_title") == F.col("r_title"), "left")
         .select(
             "from_page_id",
             "from_title",
@@ -638,20 +735,6 @@ def import_dump_full(
         .groupBy("from_page_id", "from_title", "to_title_resolved")
         .agg(F.sum("n_occurrences").alias("n_occurrences"))
     )
-
-    for name, df in out.items():
-        sink_parquet(df, f"{out_dir}/{name}.parquet")
-    if jdbc_url is not None:
-        for name in ("page", "redirect", "pagelinks_resolved"):
-            sink_jdbc(
-                out[name],
-                jdbc_url,
-                f"wiki_{name}",
-                mode="overwrite",
-                num_partitions=4,
-                properties=jdbc_properties,
-            )
-    return out
 
 
 # --------------------------------------------------------------------------
